@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** One contender in the cross-PROCESS store-publish race
   * (StoreLockSpec spawns two of these as separate JVMs): builds the
   * stored corpus-signature table for the given fixture — a full
-  * storedTable build → locked atomic publish → read-back — and
-  * prints the row count it read. The store root comes from
+  * [[graft.io.Store.table]] build → locked atomic Store.publish →
+  * read-back; the build is multi-stage, so the two JVMs' builds
+  * overlap — and prints the row count it read. The store root comes from
   * SPARK_GRAFT_SIG_STORE (set per-race by the spec), which is the
   * reason this is a separate JVM at all: the env var cannot be set
   * for an in-process SparkSession, and an in-JVM race only exercises

@@ -3,9 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** TRUE multi-process store-publish race (VERDICT r14 ask #5): two
-  * SEPARATE JVMs race the same storedTable build+publish. The in-JVM
+  * SEPARATE JVMs race the same Store.table build+publish. The in-JVM
   * path monitor cannot arbitrate across processes — only the
-  * [[java.nio.channels.FileLock]] in Dedup.publish does — so this is
+  * [[java.nio.channels.FileLock]] in Store.publish does — so this is
   * the one test that exercises the lock the publish contract actually
   * stands on. Invariants demanded: both contenders exit 0 and read
   * the SAME row count (neither ever saw a half-published store), the
